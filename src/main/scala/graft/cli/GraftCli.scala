@@ -47,6 +47,17 @@ object GraftCli {
       }
     })
 
+  /** The LLM transport of every enriching verb: real HTTP when an endpoint
+    * is configured in the environment or in the `.env` file named by
+    * `GRAFT_ENV_FILE`, the deterministic mock otherwise. Resolved
+    * driver-side, so executors receive the decision already made.
+    */
+  private def llmTransport(): () => graft.enrich.LlmTransport = {
+    val transport = graft.enrich.LlmTransports.fromEnvironment(
+      sys.env.get("GRAFT_ENV_FILE").map(java.nio.file.Paths.get(_)))
+    () => transport
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.local(
       cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt,
@@ -78,28 +89,20 @@ object GraftCli {
           val r = SiteJob.run(spark, csv, mdDir, template, outHtml)
           println(s"site: ${r.schools} schools -> ${r.htmlPath}")
         case "enrich" :: inDir :: outMdDir :: outJsonDir :: promptTpl :: rest =>
-          // real HTTP when an endpoint is configured in the environment /
-          // GRAFT_ENV_FILE (.env), deterministic mock otherwise; resolved
-          // driver-side, shipped into the executor closure
-          val transport = graft.enrich.LlmTransports.fromEnvironment(
-            sys.env.get("GRAFT_ENV_FILE").map(java.nio.file.Paths.get(_)))
           val s = graft.enrich.EnrichJob.run(spark, inDir, outMdDir, outJsonDir,
             promptTpl, limit = rest.headOption.map(_.toInt),
-            transportFactory = () => transport)
+            transportFactory = llmTransport())
           println(s"enrich: total=${s.total} skipped=${s.skipped} attempted=${s.attempted} " +
             s"successful=${s.successful} failed=${s.failed}")
         case "enrich-stream" :: inDir :: outMdDir :: outJsonDir :: promptTpl :: ckpt :: Nil =>
           // Hadoop-FS read: the template can live beside the data (HDFS/
           // S3/file: URIs), and local relative paths still resolve
           val prompt = graft.operators.IndexFs.readUtf8(promptTpl)
-          // same env-driven transport resolution as the batch `enrich` path
-          val streamTransport = graft.enrich.LlmTransports.fromEnvironment(
-            sys.env.get("GRAFT_ENV_FILE").map(java.nio.file.Paths.get(_)))
           val q = graft.streaming.StreamingOps.enrichStream(
             spark, inDir, outMdDir, outJsonDir, prompt, ckpt,
-            transportFactory = () => streamTransport)
-          q.processAllAvailable() // drain what's there now; rerun to pick up new files
-          q.stop()
+            transportFactory = llmTransport())
+          // drain what's there now; rerun to pick up new files
+          try q.processAllAvailable() finally q.stop()
           println(s"enrich-stream: drained $inDir -> $outMdDir (checkpoint $ckpt)")
         case "all" :: csv :: mdTpl :: promptTpl :: siteTpl :: workDir :: Nil =>
           // §7.1 step 10: the orchestrator's pipeline-run surface — three
@@ -113,7 +116,8 @@ object GraftCli {
           }
           val st = graft.enrich.EnrichJob.run(spark,
             s"$workDir/generated_markdown_from_csv",
-            s"$workDir/ai_processed_markdown", s"$workDir/ai_raw_responses", promptTpl)
+            s"$workDir/ai_processed_markdown", s"$workDir/ai_raw_responses", promptTpl,
+            transportFactory = llmTransport())
           println(s"all[2/3] enrich: total=${st.total} skipped=${st.skipped} successful=${st.successful} failed=${st.failed}")
           val site = SiteJob.run(spark, csv, s"$workDir/ai_processed_markdown",
             siteTpl, s"$workDir/output/index.html")
@@ -1232,15 +1236,14 @@ object GraftCli {
           // Positional: [agent] [capacity]. Flags: --index <dir> turns on
           // cross-snapshot admission against persisted fp/sig indexes;
           // --enrich <templateFile> appends the LLM-map stage (transport
-          // resolved from the environment, mock when nothing is configured —
-          // the reference's Program 1→2→3 chain in one command).
+          // from llmTransport() — the reference's Program 1→2→3 chain in
+          // one command).
           val (flags, pos) = splitFlags(rest)
           val agent = pos.headOption.getOrElse("graftbot")
           val capacity = pos.drop(1).headOption.map(_.toLong).getOrElse(2048L)
           val enrich = flags.get("--enrich").map { tf =>
             graft.pipeline.CrawlPipeline.EnrichStage(
-              () => graft.enrich.LlmTransports.fromEnvironment(),
-              graft.operators.IndexFs.readUtf8(tf))
+              llmTransport(), graft.operators.IndexFs.readUtf8(tf))
           }
           // --mix en:30000,de:9000 adds the dataset-assembly stages
           // (language tag → exact token-budget mix → training order);

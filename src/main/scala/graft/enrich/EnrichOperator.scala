@@ -3,104 +3,97 @@ package graft.enrich
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.Dataset
 
-import java.util.concurrent.{Executors, Future => JFuture, TimeUnit}
+import java.util.concurrent.{Callable, Executors, Future => JFuture, TimeUnit}
 import scala.collection.mutable
 
-/** E1/E2: the distributed LLM-map operator — `mapPartitions` with a bounded
-  * thread pool and a per-partition rate limiter (SURVEY.md §2.7).
+/** E1/E2/E3: the distributed LLM-map operator — `mapPartitions` over a
+  * thread pool — and the one place that throttles the LLM (SURVEY.md §2.7).
   *
-  * Scale design: the reference fans out 250 concurrent requests from one
-  * process; here each of N partitions runs `maxConcurrent / N` workers and a
-  * token bucket at `targetRpm / N`, so the global in-flight and request-rate
-  * envelopes match the reference's semaphore + AsyncLimiter regardless of
-  * cluster size. Transport/pool lifecycle is per-partition (the analogue of
-  * the reference's pooled ClientSession). The limiter gates every transport
-  * ATTEMPT (retries included), like the reference's `async with rate_limiter`
-  * inside the retry loop (`src/program2_ai_processor.py:387-389`).
+  * The reference throttles Program 2 with one `asyncio.Semaphore(250)` and
+  * one 10 000 RPM `AsyncLimiter` (`src/config.py:91-92`). Here one
+  * driver-hosted [[RateLimiterServer]] holds both for the duration of the
+  * caller's action: `maxConcurrent` leased slots and one token bucket at
+  * `targetRpm`, shared by every partition of every executor. The input is
+  * coalesced to `defaultParallelism` partitions, so every partition runs at
+  * once and the global envelope is the only bound.
   *
-  * Rows stream through the pool under a bounded in-flight window of
-  * 2×concurrency: only O(concurrency) documents (and their responses) are
-  * resident per partition at any moment, regardless of partition size —
-  * `invokeAll` over the whole partition would OOM at 100 TB. Results preserve
-  * input order within a partition (FIFO completion drain).
+  * Within a partition the task thread takes a slot for the next document
+  * and only then hands the document to a pool thread, so no thread is
+  * parked per queued document. The pool thread holds the slot for the whole
+  * call, retries included, like the reference's semaphore around its retry
+  * loop; the caller draws one rate permit per ATTEMPT, like the reference's
+  * `async with rate_limiter` inside that loop
+  * (`src/program2_ai_processor.py:387-389`). Transport and pool live per
+  * partition (the analogue of the reference's pooled ClientSession).
+  *
+  * Rows stream under a window of 2×maxConcurrent pending results per
+  * partition — `invokeAll` over the whole partition would OOM at 100 TB —
+  * and come out in input order (FIFO drain).
   */
 object EnrichOperator {
 
   final case class Doc(key: String, content: String)
   final case class Enriched(key: String, ok: Boolean, description: String, raw: String)
 
-  def enrich(
+  /** Enriches `docs` and runs `consume` on the result inside the envelope:
+    * every action that reads the enriched rows must run within `consume`,
+    * because the envelope stops when it returns.
+    */
+  def enrich[T](
       docs: Dataset[Doc],
       transportFactory: () => LlmTransport,
       promptTemplate: String,
       config: EnrichConfig = EnrichConfig(),
-      sleeper: Long => Unit = Thread.sleep,
-      // when set (EnrichJob's exactGlobalRpm path), every partition draws
-      // permits from the same driver-hosted bucket instead of rpm/N
-      limiterFactory: Option[() => RateLimiter] = None,
-      // when set (EnrichJob's exactGlobalConcurrency path), every transport
-      // call holds one of maxConcurrent driver-leased slots — the exact
-      // global cap instead of the per-partition pool-size approximation
-      slotFactory: Option[() => RemoteConcurrencyLimiter] = None): Dataset[Enriched] = {
+      sleeper: Long => Unit = Thread.sleep)(consume: Dataset[Enriched] => T): T = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val nParts = math.max(1, docs.rdd.getNumPartitions)
-    // Exact global mode: each partition runs a FULL-width pool and the
-    // driver's semaphore owns the global bound — one starved partition can
-    // then use every slot the others leave idle (single-process semaphore
-    // semantics). Approximate mode: the bound IS the pool sizing, so divide.
-    val perPartConcurrency =
-      if (slotFactory.isDefined) math.max(1, config.maxConcurrent)
-      else math.max(1, config.maxConcurrent / nParts)
-    val perPartRpm = config.targetRpm.toDouble / nParts
-
-    docs.mapPartitions { rows =>
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val transport = transportFactory()
-        val limiter = limiterFactory.map(_.apply())
-          .getOrElse(new RateLimiter(perPartRpm, sleeper))
-        val slots = slotFactory.map(_.apply())
-        val caller = new RetryingLlmCaller(transport, config, sleeper, limiter)
-        val pool = Executors.newFixedThreadPool(perPartConcurrency)
-        // if the consumer abandons the iterator (limit, task kill), still
-        // release the pool threads at task end
-        Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
-          pool.shutdownNow(); ()
-        })
-        val window = perPartConcurrency * 2
-        val pending = mutable.Queue.empty[JFuture[Enriched]]
-
-        def submit(doc: Doc): JFuture[Enriched] =
-          pool.submit(new java.util.concurrent.Callable[Enriched] {
-            override def call(): Enriched = {
-              val payload = PromptTemplate.buildPayload(promptTemplate, doc.content)
-              // slot held for the whole call incl. retries — the reference
-              // holds its semaphore around the full retry loop likewise
-              val r = slots match {
-                case Some(s) => s.withSlot(caller.call(payload))
-                case None => caller.call(payload)
-              }
-              Enriched(doc.key, r.ok, r.description.orNull, r.raw.orNull)
-            }
+    val server = RateLimiterServer.start(config.targetRpm.toDouble, config.maxConcurrent)
+    try {
+      val host = spark.sparkContext.getConf.get("spark.driver.host", "127.0.0.1")
+      val port = server.port // the server itself is not serializable
+      val window = 2 * config.maxConcurrent
+      consume(docs.coalesce(spark.sparkContext.defaultParallelism).mapPartitions { rows =>
+        if (!rows.hasNext) Iterator.empty
+        else {
+          val slots = new RemoteConcurrencyLimiter(host, port)
+          val caller = new RetryingLlmCaller(transportFactory(), config, sleeper,
+            new RemoteRateLimiter(host, port, sleeper))
+          val pool = Executors.newCachedThreadPool()
+          // if the consumer abandons the iterator (limit, task kill), still
+          // release the pool threads at task end
+          Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { _ =>
+            pool.shutdownNow(); ()
           })
-        def fill(): Unit =
-          while (rows.hasNext && pending.size < window) pending.enqueue(submit(rows.next()))
+          val pending = mutable.Queue.empty[JFuture[Enriched]]
 
-        fill()
-        new Iterator[Enriched] {
-          override def hasNext: Boolean = pending.nonEmpty
-          override def next(): Enriched = {
-            val r = pending.dequeue().get()
-            fill()
-            if (pending.isEmpty) {
-              pool.shutdown()
-              pool.awaitTermination(1, TimeUnit.MINUTES)
+          def fill(): Unit =
+            while (rows.hasNext && pending.size < window) {
+              val doc = rows.next()
+              val slot = slots.acquire()
+              pending.enqueue(pool.submit(new Callable[Enriched] {
+                override def call(): Enriched =
+                  try {
+                    val r = caller.call(PromptTemplate.buildPayload(promptTemplate, doc.content))
+                    Enriched(doc.key, r.ok, r.description.orNull, r.raw.orNull)
+                  } finally slot.close()
+              }))
             }
-            r
+
+          fill()
+          new Iterator[Enriched] {
+            override def hasNext: Boolean = pending.nonEmpty
+            override def next(): Enriched = {
+              val r = pending.dequeue().get()
+              fill()
+              if (pending.isEmpty) {
+                pool.shutdown()
+                pool.awaitTermination(1, TimeUnit.MINUTES)
+              }
+              r
+            }
           }
         }
-      }
-    }
+      })
+    } finally server.stop()
   }
 }

@@ -6,7 +6,8 @@ import java.util.concurrent.{Executors, Semaphore}
 import java.util.concurrent.atomic.AtomicBoolean
 
 /** Exact GLOBAL rate limiting and concurrency capping (E2/E3) as a
-  * driver-hosted side service.
+  * driver-hosted side service — the envelope [[EnrichOperator.enrich]]
+  * opens around every enrichment action.
   *
   * The reference's `AsyncLimiter(rpm)` and `asyncio.Semaphore(250)` are exact
   * because Program 2 is one process (`src/program2_ai_processor.py:772-787`,
@@ -18,9 +19,7 @@ import java.util.concurrent.atomic.AtomicBoolean
   *     replies with an 8-byte wait-in-millis; the client sleeps locally and
   *     the connection closes. Grants are serialized server-side, so the
   *     global request schedule is EXACTLY one permit per `60000/rpm` ms
-  *     across every partition of every executor — not the per-partition
-  *     `rpm/N` approximation (which [[RateLimiter]] remains, as the
-  *     zero-infra default).
+  *     across every partition of every executor.
   *   - `'C'` (concurrency): server blocks until one of `maxConcurrent` slots
   *     frees, replies with an 8-byte grant, and the client HOLDS the
   *     connection for the duration of its LLM call — the lease is the open
@@ -137,8 +136,7 @@ object RateLimiterServer {
   */
 final class RemoteRateLimiter(
     host: String, port: Int, sleeper: Long => Unit = Thread.sleep,
-    maxAttempts: Int = 3)
-    extends RateLimiter(0.0, sleeper) {
+    maxAttempts: Int = 3) extends RateLimiter {
 
   @transient private lazy val warned = new AtomicBoolean(false)
 
@@ -173,12 +171,12 @@ final class RemoteRateLimiter(
   }
 }
 
-/** Executor-side global concurrency slot (E2 exact mode): `withSlot` blocks
-  * until the driver grants one of its `maxConcurrent` leases, runs `body`
-  * with the lease's socket held open, and releases by closing it. Queueing
-  * is unbounded by design — a full window simply parks the caller, exactly
-  * like the reference's `async with semaphore`. Fails OPEN per call when the
-  * server is unreachable (same rationale as [[RemoteRateLimiter]]).
+/** Executor-side global concurrency slot (E2): `acquire` blocks until the
+  * driver grants one of its `maxConcurrent` leases and returns the lease,
+  * whose socket stays open until it is closed. Queueing is unbounded by
+  * design — a full window simply parks the caller, exactly like the
+  * reference's `async with semaphore`. Fails OPEN per call (a no-op lease)
+  * when the server is unreachable (same rationale as [[RemoteRateLimiter]]).
   */
 final class RemoteConcurrencyLimiter(
     host: String, port: Int, connectTimeoutMs: Int = 5000,
@@ -186,7 +184,7 @@ final class RemoteConcurrencyLimiter(
 
   @transient private lazy val warned = new AtomicBoolean(false)
 
-  def withSlot[T](body: => T): T = {
+  def acquire(): AutoCloseable = {
     var lease: Option[Socket] = None
     var attempt = 0
     while (lease.isEmpty && attempt < maxAttempts) {
@@ -210,7 +208,13 @@ final class RemoteConcurrencyLimiter(
     if (lease.isEmpty && warned.compareAndSet(false, true))
       System.err.println(
         s"[enrich] concurrency-limiter server $host:$port unreachable; failing open (uncapped)")
-    try body
-    finally lease.foreach(s => try s.close() catch { case _: java.io.IOException => () })
+    val held = lease
+    () => held.foreach(s => try s.close() catch { case _: java.io.IOException => () })
+  }
+
+  /** Runs `body` while holding one slot. */
+  def withSlot[T](body: => T): T = {
+    val lease = acquire()
+    try body finally lease.close()
   }
 }

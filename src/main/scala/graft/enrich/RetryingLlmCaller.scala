@@ -19,22 +19,16 @@ import java.util.concurrent.TimeoutException
   *     the final attempt, then falls through to the all-failed result
   *   - other status / network error / timeout / unexpected → backoff^attempt,
   *     fail with typed error after the last attempt
+  *
+  * `targetRpm` and `maxConcurrent` size the one global envelope that
+  * [[EnrichOperator.enrich]] opens around every enrichment action.
   */
 final case class EnrichConfig(
     maxRetries: Int = RefConfig.MaxRetries,
     backoffFactor: Double = RefConfig.BackoffFactor,
     retrySleepOn429Seconds: Int = RefConfig.RetrySleepOn429Seconds,
     targetRpm: Int = RefConfig.TargetRpm,
-    maxConcurrent: Int = RefConfig.MaxConcurrentRequests,
-    // true → one driver-hosted token bucket shared by every partition
-    // ([[RateLimiterServer]], exact like the reference's AsyncLimiter);
-    // false → zero-infra per-partition rpm/N approximation
-    exactGlobalRpm: Boolean = false,
-    // true → at most `maxConcurrent` LLM calls in flight ACROSS the whole
-    // job, leased from the same driver-hosted server (exact like the
-    // reference's asyncio.Semaphore(250), src/config.py:91); false →
-    // zero-infra per-partition maxConcurrent/N pool-size approximation
-    exactGlobalConcurrency: Boolean = false)
+    maxConcurrent: Int = RefConfig.MaxConcurrentRequests)
 
 /** Outcome of one enrichment call: `raw` carries the response body (or a
   * synthesized error JSON) for the raw/FAILED sinks (E7).
@@ -126,26 +120,14 @@ final class RetryingLlmCaller(
   }
 }
 
-/** E3: minimal blocking token bucket — one permit every `60000/rpm` ms. Each
-  * Spark partition runs its own bucket at `rpm / numPartitions`, approximating
-  * the reference's global AsyncLimiter (documented approximation, SURVEY §7.3
-  * risk 3 — an exact global limit needs a side service).
+/** E3: a source of request permits — `acquire` blocks until the next one.
+  * The one token bucket behind it is [[RateLimiterServer]]'s.
   */
-class RateLimiter(ratePerMinute: Double, sleeper: Long => Unit = Thread.sleep)
-    extends Serializable {
-  private val intervalMs: Double = if (ratePerMinute <= 0) 0.0 else 60000.0 / ratePerMinute
-  private var nextFreeAtMs: Double = 0.0
-
-  def acquire(): Unit = synchronized {
-    val now = System.currentTimeMillis().toDouble
-    val target = math.max(now, nextFreeAtMs)
-    nextFreeAtMs = target + intervalMs
-    val wait = (target - now).toLong
-    if (wait > 0) sleeper(wait)
-  }
+trait RateLimiter extends Serializable {
+  def acquire(): Unit
 }
 
 object RateLimiter {
-  /** Zero-rate bucket: every acquire returns immediately. */
-  val unlimited: RateLimiter = new RateLimiter(0.0, _ => ())
+  /** Every acquire returns immediately. */
+  val unlimited: RateLimiter = () => ()
 }

@@ -631,24 +631,14 @@ object CrawlPipeline {
           }
       val carried = prevOk.join(inputs.select(col("key")), Seq("key"), "left_semi")
       val fresh = inputs.join(prevOk.select(col("key")), Seq("key"), "left_anti")
-      // the exact-global rate/concurrency envelope (e.config's
-      // exactGlobalRpm / exactGlobalConcurrency) is wired through
-      // EnrichJob's OWN construction, so the pipeline path and the direct
-      // job path enforce the identical driver-hosted leases — the options
-      // must never silently degrade to the per-partition approximation here
-      val envelope = graft.enrich.EnrichJob.exactEnvelope(spark, e.config)
-      try {
-        val enriched = EnrichOperator.enrich(fresh.as[EnrichOperator.Doc],
-          e.transportFactory, e.promptTemplate, e.config,
-          limiterFactory = envelope.limiterFactory,
-          slotFactory = envelope.slotFactory)
-        val out = ck("10_enrich",
-          enriched.toDF().unionByName(carried), parts = Seq("ok"))
-        if (countStages) {
-          counts += StageCount("10_enrich_ok", out.where(col("ok")).count())
-          counts += StageCount("10_enrich_fail", out.where(!col("ok")).count())
-        }
-      } finally envelope.stop()
+      val out = EnrichOperator.enrich(fresh.as[EnrichOperator.Doc],
+          e.transportFactory, e.promptTemplate, e.config) { enriched =>
+        ck("10_enrich", enriched.toDF().unionByName(carried), parts = Seq("ok"))
+      }
+      if (countStages) {
+        counts += StageCount("10_enrich_ok", out.where(col("ok")).count())
+        counts += StageCount("10_enrich_fail", out.where(!col("ok")).count())
+      }
     }
 
     counts.toSeq

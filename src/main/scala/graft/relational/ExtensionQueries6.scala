@@ -739,11 +739,11 @@ object ExtensionQueries6 {
           val qQ = startTo(
             graft.streaming.StreamingOps.sketchStream(stream(), $"n_chars").toDF(),
             "t100_qsketch")
-          qQ.processAllAvailable(); qQ.stop()
+          try qQ.processAllAvailable() finally qQ.stop()
           val hQ = startTo(
             graft.streaming.StreamingOps.hllStream(stream(), $"lang", $"doc_id").toDF(),
             "t100_hll")
-          hQ.processAllAvailable(); hQ.stop()
+          try hQ.processAllAvailable() finally hQ.stop()
         } finally s.conf.set("spark.sql.shuffle.partitions", prevSp)
         // quantile sketch: counts are monotone, so max(n) per bucket is the
         // final streaming state — must equal the batch sketch bit-for-bit

@@ -318,39 +318,37 @@ object StreamingOps {
   /** Streaming enrichment: the incremental Program-2 mode. New markdown files
     * landing in `inDir` are enriched exactly once (checkpointed intake
     * replaces the reference's filesystem-existence check). Implemented with
-    * foreachBatch so each micro-batch reuses the batch EnrichOperator.
+    * foreachBatch so each micro-batch reuses the batch EnrichOperator, and
+    * with it one rate/concurrency envelope per micro-batch.
     */
   def enrichStream(
       spark: SparkSession, inDir: String, outMdDir: String, outJsonDir: String,
       promptTemplate: String, checkpointDir: String,
       transportFactory: () => graft.enrich.LlmTransport = () => new graft.enrich.MockLlmTransport,
-      // E2/E3 budgeting flows through to every micro-batch; the exact global
-      // modes need a caller-owned RateLimiterServer (it must outlive the
-      // query), wired in via these factories exactly as in EnrichJob
-      config: graft.enrich.EnrichConfig = graft.enrich.EnrichConfig(),
-      limiterFactory: Option[() => graft.enrich.RateLimiter] = None,
-      slotFactory: Option[() => graft.enrich.RemoteConcurrencyLimiter] = None)
+      config: graft.enrich.EnrichConfig = graft.enrich.EnrichConfig())
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import spark.implicits._
     import graft.enrich._
     val docs = spark.readStream
       .option("wholetext", "true")
       .text(s"$inDir/*.md")
-      .select(
-        regexp_extract(input_file_name(), "([^/]+)\\.md$", 1).as("key"),
+      .select(graft.sources.SchoolCsv.documentKeyColumn(".md").as("key"),
         col("value").as("content"))
     docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val enriched = EnrichOperator.enrich(
-          batch.as[EnrichOperator.Doc], transportFactory, promptTemplate,
-          config, limiterFactory = limiterFactory, slotFactory = slotFactory)
-        val ok = enriched.filter(col("ok")).toDF()
-        graft.sinks.KeyedFileSink.write(ok, "key", "description", outMdDir,
-          graft.core.RefConfig.AiProcessedSuffix)
-        graft.sinks.KeyedFileSink.write(ok, "key", "raw", outJsonDir,
-          graft.core.RefConfig.AiRawResponseSuffix)
+        EnrichOperator.enrich(
+            batch.as[EnrichOperator.Doc], transportFactory, promptTemplate, config) { enriched =>
+          // cached: the two sinks below must not pay the LLM twice
+          val ok = enriched.filter(col("ok")).toDF().cache()
+          try {
+            graft.sinks.KeyedFileSink.write(ok, "key", "description", outMdDir,
+              graft.core.RefConfig.AiProcessedSuffix)
+            graft.sinks.KeyedFileSink.write(ok, "key", "raw", outJsonDir,
+              graft.core.RefConfig.AiRawResponseSuffix)
+          } finally ok.unpersist()
+        }
         ()
       }
       .start()

@@ -136,6 +136,50 @@ class EnrichSpec extends SparkSpec {
     assert(s2 == EnrichJob.Stats(2, 2, 0, 0, 0))
   }
 
+  test("EnrichJob limit=1 enriches the first fresh key in sorted order, a rerun the next") {
+    val dir = java.nio.file.Files.createTempDirectory("enrichlimit").toString
+    def write(p: String, c: String): Unit = {
+      val path = java.nio.file.Paths.get(p)
+      java.nio.file.Files.createDirectories(path.getParent)
+      java.nio.file.Files.write(path, c.getBytes("UTF-8"))
+    }
+    Seq("C3", "A1", "B2").foreach(k => write(s"$dir/in/$k.md", s"# $k\ndata"))
+    write(s"$dir/prompt.txt", "SYSTEM:\nsys\nUSER:\n{school_data}")
+    def enriched = new java.io.File(s"$dir/outmd").list().toSeq.sorted
+    val s1 = EnrichJob.run(spark, s"$dir/in", s"$dir/outmd", s"$dir/outjson",
+      s"$dir/prompt.txt", limit = Some(1), sleeper = _ => ())
+    assert(s1 == EnrichJob.Stats(3, 2, 1, 1, 0))
+    assert(enriched == Seq("A1_ai_description.md"))
+    val s2 = EnrichJob.run(spark, s"$dir/in", s"$dir/outmd", s"$dir/outjson",
+      s"$dir/prompt.txt", limit = Some(1), sleeper = _ => ())
+    assert(s2 == EnrichJob.Stats(3, 2, 1, 1, 0))
+    assert(enriched == Seq("A1_ai_description.md", "B2_ai_description.md"))
+  }
+
+  test("document keys are decoded: a key with a space round-trips through EnrichJob") {
+    val dir = java.nio.file.Files.createTempDirectory("enrichspace").toString
+    def write(p: String, c: String): Unit = {
+      val path = java.nio.file.Paths.get(p)
+      java.nio.file.Files.createDirectories(path.getParent)
+      java.nio.file.Files.write(path, c.getBytes("UTF-8"))
+    }
+    write(s"$dir/in/a b.md", "# A B\ndata")
+    write(s"$dir/prompt.txt", "SYSTEM:\nsys\nUSER:\n{school_data}")
+    import spark.implicits._
+    val keys = graft.sources.SchoolCsv.readDocumentDir(spark, s"$dir/in", ".md")
+      .select("key").as[String].collect().toSeq
+    assert(keys == Seq("a b"))
+    val s1 = EnrichJob.run(spark, s"$dir/in", s"$dir/outmd", s"$dir/outjson",
+      s"$dir/prompt.txt", sleeper = _ => ())
+    assert(s1 == EnrichJob.Stats(1, 0, 1, 1, 0))
+    assert(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$dir/outmd/a b_ai_description.md")))
+    // the written description is found again: a rerun skips it
+    val s2 = EnrichJob.run(spark, s"$dir/in", s"$dir/outmd", s"$dir/outjson",
+      s"$dir/prompt.txt", sleeper = _ => ())
+    assert(s2 == EnrichJob.Stats(1, 1, 0, 0, 0))
+  }
+
   test("EnrichJob routes failures to FAILED json sink") {
     val dir = java.nio.file.Files.createTempDirectory("enrichfail").toString
     def write(p: String, c: String): Unit = {

@@ -169,28 +169,41 @@ class GlobalRateLimiterSpec extends graft.SparkSpec {
     } finally srv.stop()
   } }
 
-  test("EnrichOperator exactGlobalConcurrency holds <=N in flight across partitions") { retryOnLoad() {
-    val srv = RateLimiterServer.start(ratePerMinute = 6000000, maxConcurrent = 2)
-    try {
-      import spark.implicits._
-      ConcurrencyProbe.reset()
-      // 4 partitions, each running a FULL-width local pool: 8 worker threads
-      // compete for the server's 2 global slots
-      val docs = spark.createDataset((1 to 12).map(i =>
-        EnrichOperator.Doc(s"k$i", s"content $i"))).repartition(4)
-      val port = srv.port // capture the port, not the (unserializable) server
-      val out = EnrichOperator.enrich(
-        docs, () => new ProbeTransport, "SYSTEM:\nsys\nUSER:\n{school_data}",
-        EnrichConfig(maxConcurrent = 2, exactGlobalConcurrency = true),
-        sleeper = _ => (),
-        slotFactory = Some(() => new RemoteConcurrencyLimiter("127.0.0.1", port)))
-      assert(out.collect().length == 12)
-      assert(ConcurrencyProbe.peak.get() >= 1 && ConcurrencyProbe.peak.get() <= 2,
-        s"peak=${ConcurrencyProbe.peak.get()}")
-    } finally srv.stop()
+  test("EnrichOperator holds <=N in flight across partitions") { retryOnLoad() {
+    import spark.implicits._
+    ConcurrencyProbe.reset()
+    // 4 partitions compete for the envelope's 2 global slots
+    val docs = spark.createDataset((1 to 12).map(i =>
+      EnrichOperator.Doc(s"k$i", s"content $i"))).repartition(4)
+    val out = EnrichOperator.enrich(
+      docs, () => new ProbeTransport, "SYSTEM:\nsys\nUSER:\n{school_data}",
+      EnrichConfig(maxConcurrent = 2), sleeper = _ => ())(_.collect())
+    assert(out.length == 12)
+    assert(ConcurrencyProbe.peak.get() >= 1 && ConcurrencyProbe.peak.get() <= 2,
+      s"peak=${ConcurrencyProbe.peak.get()}")
   } }
 
-  test("EnrichJob end-to-end with exactGlobalRpm routes permits through the server") {
+  test("EnrichJob with only maxConcurrent set holds <=N in flight over 4+ input partitions") {
+    retryOnLoad() {
+      val dir = java.nio.file.Files.createTempDirectory("grlcap").toString
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$dir/in"))
+      (1 to 16).foreach(i => java.nio.file.Files.write(
+        java.nio.file.Paths.get(s"$dir/in/S$i.md"), s"# School $i\ndata".getBytes("UTF-8")))
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/prompt.txt"),
+        "SYSTEM:\nsys\nUSER:\n{school_data}".getBytes("UTF-8"))
+      val inParts = graft.sources.SchoolCsv.readDocumentDir(spark, s"$dir/in", ".md")
+        .rdd.getNumPartitions
+      assert(inParts >= 4, s"input partitions=$inParts")
+      ConcurrencyProbe.reset()
+      val stats = EnrichJob.run(spark, s"$dir/in", s"$dir/outmd", s"$dir/outjson",
+        s"$dir/prompt.txt", () => new ProbeTransport, EnrichConfig(maxConcurrent = 2))
+      assert(stats == EnrichJob.Stats(16, 0, 16, 16, 0))
+      val peak = ConcurrencyProbe.peak.get()
+      assert(peak >= 1 && peak <= 2, s"peak=$peak")
+    }
+  }
+
+  test("EnrichJob end-to-end routes permits through the server") {
     val dir = java.nio.file.Files.createTempDirectory("grl").toString
     def write(p: String, c: String): Unit = {
       val path = java.nio.file.Paths.get(p)
@@ -201,7 +214,7 @@ class GlobalRateLimiterSpec extends graft.SparkSpec {
     write(s"$dir/prompt.txt", "SYSTEM:\nsys\nUSER:\n{school_data}")
     val stats = EnrichJob.run(spark, s"$dir/in", s"$dir/outmd", s"$dir/outjson",
       s"$dir/prompt.txt",
-      config = EnrichConfig(exactGlobalRpm = true, targetRpm = 600000))
+      config = EnrichConfig(targetRpm = 600000))
     assert(stats.attempted == 6 && stats.successful == 6 && stats.failed == 0)
     assert(new java.io.File(s"$dir/outmd").list().count(_.endsWith(".md")) == 6)
   }

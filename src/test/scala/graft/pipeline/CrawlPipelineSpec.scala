@@ -341,11 +341,9 @@ class CrawlPipelineSpec extends SparkSpec {
   test("10_enrich enforces the EXACT global concurrency envelope through the pipeline path") {
     // the reference's Semaphore(250) contract (src/config.py:91) must hold
     // when enrichment runs as a pipeline stage, not only via EnrichJob: the
-    // enrich input is a post-join frame spread over the 32 shuffle
-    // partitions, so if the pipeline DROPPED the lease factories the
-    // per-partition approximation would run min-1-thread pools on many
-    // concurrent tasks and overshoot maxConcurrent=2 — the driver-hosted
-    // slot server is the only thing that can hold the global peak at 2
+    // enrich input is a post-join frame spread over many partitions, each
+    // a concurrent task — the driver-hosted slot server is the only thing
+    // that can hold the global peak at 2
     val warcDir = Files.createTempDirectory("crawl10_warc")
     val work = Files.createTempDirectory("crawl10_work").toString
     def body(i: Int) =
@@ -357,8 +355,7 @@ class CrawlPipelineSpec extends SparkSpec {
         qualityThresholds = graft.operators.QualityRules.Thresholds(minStopHits = 0L),
         enrichStage = Some(CrawlPipeline.EnrichStage(
           () => new graft.enrich.ProbeTransport, promptTemplate,
-          graft.enrich.EnrichConfig(maxConcurrent = 2,
-            exactGlobalConcurrency = true))))
+          graft.enrich.EnrichConfig(maxConcurrent = 2))))
       .map(c => c.stage -> c.rows).toMap
     assert(counts("10_enrich") == 12 && counts("10_enrich_ok") == 12, counts.toString)
     val peak = graft.enrich.ConcurrencyProbe.peak.get()

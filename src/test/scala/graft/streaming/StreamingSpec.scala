@@ -119,17 +119,22 @@ class StreamingSpec extends SparkSpec {
     Files.createDirectories(java.nio.file.Paths.get(s"$dir/in"))
     Files.write(java.nio.file.Paths.get(s"$dir/in/S1.md"), "# S1\ndata".getBytes)
     val prompt = "SYSTEM:\nsys\nUSER:\n{school_data}"
+    graft.pipeline.CountingTransport.reset()
     val q = StreamingOps.enrichStream(spark, s"$dir/in", s"$dir/outmd",
-      s"$dir/outjson", prompt, s"$dir/ckpt")
-    q.processAllAvailable()
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$dir/outmd/S1_ai_description.md")))
-    // a second file lands; only it is processed in the next batch
-    Files.write(java.nio.file.Paths.get(s"$dir/in/S2.md"), "# S2\ndata".getBytes)
-    q.processAllAvailable()
-    q.stop()
+      s"$dir/outjson", prompt, s"$dir/ckpt",
+      transportFactory = () => new graft.pipeline.CountingTransport)
+    try {
+      q.processAllAvailable()
+      assert(java.nio.file.Files.exists(
+        java.nio.file.Paths.get(s"$dir/outmd/S1_ai_description.md")))
+      // a second file lands; only it is processed in the next batch
+      Files.write(java.nio.file.Paths.get(s"$dir/in/S2.md"), "# S2\ndata".getBytes)
+      q.processAllAvailable()
+    } finally q.stop()
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$dir/outmd/S2_ai_description.md")))
+    // one LLM call per document, although each batch writes two sinks
+    assert(graft.pipeline.CountingTransport.count("alpha") == 2)
   }
 
   test("enrichStream budgets micro-batches through the exact global limiters") {
@@ -138,22 +143,16 @@ class StreamingSpec extends SparkSpec {
     Files.createDirectories(java.nio.file.Paths.get(s"$dir/in"))
     (1 to 6).foreach(i => Files.write(
       java.nio.file.Paths.get(s"$dir/in/S$i.md"), s"# S$i\ndata".getBytes))
-    val srv = RateLimiterServer.start(ratePerMinute = 6000000, maxConcurrent = 2)
-    try {
-      graft.enrich.ConcurrencyProbe.reset()
-      val port = srv.port
-      val q = StreamingOps.enrichStream(spark, s"$dir/in", s"$dir/outmd",
-        s"$dir/outjson", "SYSTEM:\nsys\nUSER:\n{school_data}", s"$dir/ckpt",
-        transportFactory = () => new graft.enrich.ProbeTransport,
-        config = EnrichConfig(maxConcurrent = 2, exactGlobalConcurrency = true),
-        slotFactory = Some(() => new RemoteConcurrencyLimiter("127.0.0.1", port)))
-      q.processAllAvailable()
-      q.stop()
-      assert((1 to 6).forall(i => java.nio.file.Files.exists(
-        java.nio.file.Paths.get(s"$dir/outmd/S${i}_ai_description.md"))))
-      val peak = graft.enrich.ConcurrencyProbe.peak.get()
-      assert(peak >= 1 && peak <= 2, s"peak=$peak")
-    } finally srv.stop()
+    graft.enrich.ConcurrencyProbe.reset()
+    val q = StreamingOps.enrichStream(spark, s"$dir/in", s"$dir/outmd",
+      s"$dir/outjson", "SYSTEM:\nsys\nUSER:\n{school_data}", s"$dir/ckpt",
+      transportFactory = () => new graft.enrich.ProbeTransport,
+      config = EnrichConfig(maxConcurrent = 2))
+    try q.processAllAvailable() finally q.stop()
+    assert((1 to 6).forall(i => java.nio.file.Files.exists(
+      java.nio.file.Paths.get(s"$dir/outmd/S${i}_ai_description.md"))))
+    val peak = graft.enrich.ConcurrencyProbe.peak.get()
+    assert(peak >= 1 && peak <= 2, s"peak=$peak")
   }
 
   test("contamination scan runs on a streaming corpus against a static benchmark") {
